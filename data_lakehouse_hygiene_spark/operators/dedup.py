@@ -235,6 +235,16 @@ def lsh_bands(sig: DataFrame) -> DataFrame:
 BUCKET_CAP = 32
 
 
+def _pairs_sql(fields: str) -> str:
+    """In-row a<b pair combos over a sorted bucket array ``ds``: one
+    ``struct(fields)`` per unordered pair, ``fields`` being SQL over the
+    pair's elements ``x`` and ``y``."""
+    return (
+        "flatten(transform(ds, (x, i) -> "
+        f"transform(slice(ds, i + 2, size(ds)), y -> struct({fields}))))"
+    )
+
+
 def minhash_near_dup_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -269,11 +279,11 @@ def minhash_near_dup_pairs(
         .where((F.size("ds") >= 2) & (F.size("ds") <= bucket_cap))
     )
     combos = F.expr(
-        "flatten(transform(ds, (x, i) -> "
-        "transform(slice(ds, i + 2, size(ds)), y -> "
-        "struct(x.doc_id AS doc_a, y.doc_id AS doc_b, "
-        "size(filter(zip_with(x.sig, y.sig, (u, v) -> u = v), t -> t)) "
-        "AS eq))))"
+        _pairs_sql(
+            "x.doc_id AS doc_a, y.doc_id AS doc_b, "
+            "size(filter(zip_with(x.sig, y.sig, (u, v) -> u = v), t -> t)) "
+            "AS eq"
+        )
     )
     est = F.col("p.eq").cast("double") / F.lit(float(N_HASHES))
     return (
@@ -402,10 +412,9 @@ def ngram_jaccard_pairs(
         df.sparkSession.sparkContext.defaultParallelism, "s1", "s2"
     )
     combos = F.expr(
-        "flatten(transform(ds, (x, i) -> "
-        "transform(slice(ds, i + 2, size(ds)), y -> "
-        "struct(x.doc_id AS doc_a, y.doc_id AS doc_b, "
-        "x.n AS na, y.n AS nb))))"
+        _pairs_sql(
+            "x.doc_id AS doc_a, y.doc_id AS doc_b, x.n AS na, y.n AS nb"
+        )
     )
     inter = (
         pair_lists.select(F.explode(combos).alias("p"))
@@ -469,11 +478,7 @@ def _ngram_pairs_broadcast_sizes(
         pair_lists = pair_lists.repartition(
             sh_ok.sparkSession.sparkContext.defaultParallelism, "s1", "s2"
         )
-    combos = F.expr(
-        "flatten(transform(ds, (x, i) -> "
-        "transform(slice(ds, i + 2, size(ds)), y -> "
-        "struct(x AS doc_a, y AS doc_b))))"
-    )
+    combos = F.expr(_pairs_sql("x AS doc_a, y AS doc_b"))
     inter = (
         pair_lists.select(F.explode(combos).alias("p"))
         .select("p.doc_a", "p.doc_b")
@@ -907,7 +912,10 @@ SIMHASH_MAX_HAMMING = 7  # must stay < SIMHASH_BANDS for the recall guarantee
 # fingerprints — one mass-dup value of c docs plans c²/2 compares from
 # a single bucket — shard the corpus, or raise the budget after sizing
 # the cluster). 1e12 compares ≈ 35 min on this box's 32 cores; the
-# measured 30M corpus plans ~4.7e11 and passes.
+# measured 30M corpus plans ~4.7e11 and passes. Wider bands (2×32 at
+# h ≤ 3, every simhash128 plan) cannot collect a dense 2^32 histogram;
+# they refuse on the within-bucket triangle lower bound instead, which
+# still catches mass-duplicate concentration (see _mih_pairs).
 MIH_PROBE_MIN_DOCS = 2_000_000
 MIH_MAX_COMPARES = 1e12
 
@@ -934,8 +942,8 @@ def _mih_planned_compares(c, width: int, s: int) -> float:
 
 
 def _np_pop64(x):
-    """Branch-free SWAR popcount over a uint64 ndarray (same constants as
-    the in-kernel copy in simhash_near_dup_pairs)."""
+    """Branch-free SWAR popcount over a uint64 ndarray — the one popcount
+    every NumPy pair kernel sums over its signature lanes."""
     import numpy as np
 
     m1 = np.uint64(0x5555555555555555)
@@ -978,210 +986,198 @@ def mih_bands(max_hamming: int) -> int:
     )
 
 
-def _simhash_mih_pairs(
-    agg: DataFrame,
+def _mih_pairs(
+    sigs: DataFrame,
+    lanes: list[str],
+    lane_bits: int,
+    n_bands: int,
     max_hamming: int,
-    n_docs: int | None = None,
+    parts: tuple[str, ...] = (),
+    n_rows: int | None = None,
     max_compares: float | None = None,
+    family: str = "simhash",
+    dup_key: str = "signatures",
 ) -> DataFrame:
-    """Multi-index-hashing pair stage (Norouzi/Punjani/Fleet, CVPR'12):
-    the corpus-scale plan shape for simhash_near_dup_pairs, value-equal
-    to the banded plans.
+    """Multi-index-hashing pair miner (Norouzi/Punjani/Fleet, CVPR'12)
+    shared by the simhash, simhash128 and media near-dup families: all
+    pairs {a<b : hamming ≤ max_hamming} within each ``parts`` group,
+    value-equal to the banded plans (asserted in tests).
 
-    Geometry: the 64-bit signature splits into ``mih_bands(max_hamming)``
-    disjoint w-bit bands (w = 64/b) with per-band search radius
-    r = max_hamming // b (0 or 1 — callers with max_hamming > 7 stay on
-    the banded kernel). Pigeonhole: if every band differed in ≥ r+1 bits
-    the total distance would be ≥ b(r+1) > max_hamming, so every
-    qualifying pair agrees with some band to within r bits. The final
-    pair set is exactly {a<b : hamming ≤ max_hamming} — identical to the
-    other two plan shapes (asserted in tests/test_properties.py).
+    Signature: ``lanes`` are ``sigs`` columns of ``lane_bits`` bits each
+    (``[sh_lo, sh_hi]`` of 32, ``[sh_0 … sh_3]`` of 32, ``[phash]`` of
+    64); band k covers signature bits [k·w, (k+1)·w) with w =
+    lane_bits·len(lanes)/n_bands and always nests inside one lane.
+    Pigeonhole over the b = ``n_bands`` bands: every qualifying pair
+    agrees with some band to within r = max_hamming // b bits (callers
+    keep r ≤ 1). Verification is the full popcount summed over the
+    lanes, so over-generation is impossible.
 
     Transport shape (the third-decade rebuild): the Arrow task key is
-    (band, __sub) where __sub is the TOP s bits of the band value, so a
-    task owns a contiguous 2^(w-s)-value slice of one band's bucket
-    space. Band-distance-1 pairs whose differing bit is one of the LOW
-    w-s bits live in the SAME task already — the kernel finds them by
-    comparing bucket v with bucket v^bit in-memory, no variant row
-    needed. Only the s TOP-bit flips cross task boundaries, so each doc
-    emits 1+s keys per band instead of 1+w: at w=16/s=8 the exploded
-    row volume drops 17→9 per doc-band (47%), at w=32/s=8 33→9 (73%),
-    and each low-bit neighbor compare runs ONCE (v < v^bit ordering)
-    instead of twice (both variant orientations) — the quadratic
-    kernel term roughly halves on top of the transport saving
-    (measured at sf30/1.5M docs: 114 s → see SCALING.md third decade).
+    (parts, band, __sub) where __sub is the TOP s bits of the band
+    value, so a task owns a contiguous 2^(w-s)-value slice of one band's
+    bucket space. Band-distance-1 pairs whose differing bit is one of
+    the LOW w-s bits live in the SAME task — the kernel compares bucket
+    v with bucket v^bit in-memory, once (v < v^bit), no variant row
+    shipped. Only the s top-bit flips cross task boundaries, so each row
+    emits 1 + s/2 keys per band on average (set-bit rule below) instead
+    of 1 + w; the round-9 sf30 negative result (339.7 vs 231.9 s) showed
+    the kernel without this transport reduction regresses.
 
-    The kernel sorts its slice by (band_val, kind) and walks buckets
-    via np.unique boundaries — no per-bucket pandas groupby. For each
-    bucket v with exact rows E(v) and cross-sub variant rows V(v):
-    E(v)×E(v) upper triangle (band distance 0), E(v)×V(v) (top-bit
-    distance 1; found in both orientations across the two subs, deduped
-    by the final pair groupBy), and E(v)×E(v^bit) for each low bit with
-    v < v^bit (low-bit distance 1, found once). Verification is always
-    the full 64-bit SWAR popcount, so over-generation is impossible.
-
-    The repartition between signature assembly and key emit is a
-    deliberate exchange barrier: without it CollapseProject inlines the
-    full SWAR majority-vote expression into all b·(1+s) variant-key
-    expressions and Catalyst planning alone costs seconds
-    (data-size-independent; same pathology as deriving band keys from
-    sh_lo/sh_hi in the banded plan, see simhash_near_dup_pairs).
+    The kernel sorts its slice by the packed key and walks buckets via
+    np.unique boundaries. For each bucket v with exact rows E(v) and
+    cross-sub variant rows V(v): E(v)×E(v) upper triangle (band distance
+    0), E(v)×V(v) (top-bit distance 1), and E(v)×E(v^bit) for each low
+    bit with v < v^bit — the three loops ``_mih_planned_compares``
+    counts. Pairs found in several bands dedup in the final groupBy.
     """
     import numpy as np
     import pandas as pd
 
-    b = mih_bands(max_hamming)
-    w = 64 // b
-    mask = (1 << w) - 1
+    b = n_bands
+    w = lane_bits * len(lanes) // b
     r = max_hamming // b
-    # Sub-bit count s: tasks = b·2^s. Floor-first sizing (round 11,
-    # ported from the media twin's A/B — s = 4 measured ~10% faster
-    # than the old s = 8 start at 1.8M assets): start at the s = 4
-    # small-corpus floor (16 tasks/band; near-empty bucket slices pay
-    # one applyInPandas group call each, measured ~1.7 s of pure
+    mask = (1 << w) - 1
+    # Sub-bit count s: tasks = groups·b·2^s. Floor-first sizing (round
+    # 11 A/B: s = 4 measured ~10% faster than an s = 8 start at 1.8M
+    # rows): start at the s = 4 small-corpus floor (near-empty bucket
+    # slices pay one applyInPandas group call each, ~1.7 s of pure
     # per-group overhead on 6k rows) and GROW only while the
-    # ~500k-rows-per-task target is exceeded — fewer sub bits ship
-    # fewer variant rows per doc (1 + s/2 expected per doc-band, see
-    # the set-bit rule below) while the extra in-task neighbor-bit
-    # compares stay NumPy-cheap. Any s in [1, w-1] is value-exact;
-    # s ≤ w-1 keeps at least one low bit in-task.
+    # ~500k-rows-per-task target is exceeded (n·(2 + s) rows per band
+    # over 2^s tasks) — fewer sub bits ship fewer variant rows while
+    # the extra in-task neighbor-bit compares stay NumPy-cheap. Any s in
+    # [1, w-1] is value-exact; s ≤ w-1 keeps one low bit in-task.
     s = min(4, w - 1)
-    if n_docs:
-        while s < min(w - 1, 16) and n_docs * (2 + s) * b > 1_000_000 * b * (1 << s):
+    if n_rows:
+        while s < min(w - 1, 16) and n_rows * (2 + s) > 1_000_000 << s:
             s += 1
     low = w - s
-    sigs = agg.select(
-        "doc_id", _swar_half(0, "sh_lo"), _swar_half(32, "sh_hi")
-    ).repartition("doc_id")
-    # PLANNED-COMPARE refusal (round 13, the sixth-decade finding — see
-    # MIH_MAX_COMPARES): one column-pruned per-band bucket histogram
-    # (bounded collect ≤ b·2^w rows, the band-value domain) feeds the
-    # exact kernel compare term before any pair task launches. Applies
-    # to the 16-bit geometry only: 32-bit bands (h ≤ 3) have occupancy
-    # n/2^32 and their collision term stays under 1e12 compares until
-    # ~4e10 docs — far past a single job's corpus.
-    budget = MIH_MAX_COMPARES if max_compares is None else max_compares
-    if w == 16 and n_docs and n_docs >= MIH_PROBE_MIN_DOCS:
-        import numpy as _np
 
-        hsts = []
-        for k in range(b):
-            src = "sh_lo" if (k + 1) * w <= 32 else "sh_hi"
-            shift = (k * w) % 32
-            hsts.append(
-                f"struct({k} AS band,"
-                f" (shiftrightunsigned({src}, {shift}) & {mask}) AS v)"
-            )
-        rows = (
+    def band(k: int) -> str:
+        lane, shift = divmod(k * w, lane_bits)
+        return f"(shiftrightunsigned({lanes[lane]}, {shift}) & {mask})"
+
+    # PLANNED-COMPARE refusal (see MIH_MAX_COMPARES): one column-pruned
+    # per-(parts, band) bucket histogram sizes the kernel's compare term
+    # before any pair task launches. Band width picks the probe: up to
+    # 16-bit bands collect the dense histogram (≤ groups·b·2^w rows, the
+    # band-value domain, never the corpus) for the EXACT count; wider
+    # bands cannot be collected densely, so the within-bucket triangle
+    # Σ c(c−1)/2 is summed server-side (one row) — a certified LOWER
+    # bound that still catches mass-duplicate concentration, which plans
+    # c²/2 compares from one bucket at ANY band width.
+    budget = MIH_MAX_COMPARES if max_compares is None else max_compares
+    if n_rows and n_rows >= MIH_PROBE_MIN_DOCS:
+        hist = (
             sigs.select(
-                F.explode(F.expr("array(" + ",".join(hsts) + ")")).alias(
-                    "bk"
-                )
+                *parts,
+                F.explode(
+                    F.expr(
+                        "array("
+                        + ",".join(
+                            f"struct({k} AS band, {band(k)} AS v)"
+                            for k in range(b)
+                        )
+                        + ")"
+                    )
+                ).alias("bk"),
             )
-            .groupBy(F.col("bk.band").alias("band"), F.col("bk.v").alias("v"))
+            .groupBy(
+                *parts,
+                F.col("bk.band").alias("band"),
+                F.col("bk.v").alias("v"),
+            )
             .agg(F.count(F.lit(1)).alias("c"))
-            .collect()
         )
-        planned = 0.0
-        for k in range(b):
-            c = _np.zeros(1 << w, dtype=_np.float64)
-            for row in rows:
-                if row["band"] == k:
-                    c[int(row["v"])] = float(row["c"])
-            planned += _mih_planned_compares(c, w, s)
+        if w <= 16:
+            from collections import defaultdict
+
+            dense = defaultdict(lambda: np.zeros(1 << w))
+            for *key, v, c in hist.collect():
+                dense[tuple(key)][v] = c
+            planned = sum(
+                _mih_planned_compares(c, w, s) for c in dense.values()
+            )
+        else:
+            tri = F.col("c").cast("double") * (F.col("c") - 1) / 2.0
+            planned = (
+                hist.where(F.col("c") >= 2).agg(F.sum(tri)).collect()[0][0]
+                or 0.0
+            )
         if planned > budget:
             raise ValueError(
-                f"simhash MIH planned compare volume {planned:.2e} exceeds "
-                f"max_compares={budget:.0e} at the {b}×{w}-bit band "
-                f"geometry: band-collision work is Θ(n²/2^{w}) per band "
-                f"and this corpus's bucket histogram concentrates it "
+                f"{family} MIH planned compare volume {planned:.2e} "
+                f"exceeds max_compares={budget:.0e} at the {b}×{w}-bit "
+                f"band geometry: band-collision work is Θ(n²/2^{w}) per "
+                f"band and this corpus's bucket histogram concentrates it "
                 f"(mass-duplicate or low-entropy signatures are the usual "
-                f"cause — ONE signature value with c docs plans c²/2 "
-                f"compares from a single bucket). Exact-dedup identical "
-                f"signatures first, shard the corpus, or raise "
-                f"max_compares after sizing the cluster."
+                f"cause — ONE signature value with c rows plans c²/2 "
+                f"compares from a single bucket at any band width). "
+                f"Exact-dedup identical {dup_key} first, shard the corpus, "
+                f"or raise max_compares after sizing the cluster."
             )
     # Key encoding: ONE bigint ``bvk`` = band_val·2 + kind — the kind
     # flag rides the low bit, so the kernel sorts a single key (exacts
-    # land before variants of the same bucket for free) and one shipped
-    # column replaces two. SET-BIT variant rule: a top-bit flip emits a
-    # variant key only when the flipped bit is SET in the origin (the
-    # variant is a value DECREASE). A band-distance-1 pair differs in
-    # exactly that bit, so exactly one side has it set — the set side
-    # casts the variant into the cleared side's bucket, every pair is
-    # still met (full recall) but in exactly ONE orientation: expected
-    # variant volume halves (s/2 per doc-band, uniform bits) and the
-    # duplicated-discovery kernel work the old both-orientations
-    # transport paid disappears with it.
-    structs = []
+    # land before variants of the same bucket for free). SET-BIT variant
+    # rule: a top-bit flip emits a variant key only when the flipped bit
+    # is SET in the origin. A band-distance-1 pair differs in exactly
+    # that bit, so exactly one side casts the variant into the cleared
+    # side's bucket: full recall, ONE discovery orientation, expected
+    # variant volume s/2 per row-band.
+    keys = []
     for k in range(b):
-        # band k covers signature bits [k·w, (k+1)·w); sh_lo holds bits
-        # 0..31, sh_hi bits 32..63 (w ∈ {16, 32} always nests in one half)
-        src = "sh_lo" if (k + 1) * w <= 32 else "sh_hi"
-        shift = (k * w) % 32
-        bv = f"(shiftrightunsigned({src}, {shift}) & {mask})"
-        structs.append(
-            f"struct({k} AS band, cast({bv} * 2 as bigint) AS bvk)"
-        )
+        bv = band(k)
+        keys.append(f"struct({k} AS band, cast({bv} * 2 as bigint) AS bvk)")
         if r >= 1:
-            structs.extend(
+            keys.extend(
                 f"if((shiftrightunsigned({bv}, {i}) & 1) = 1,"
                 f" struct({k} AS band,"
                 f" cast(({bv} ^ {1 << i}) * 2 + 1 as bigint) AS bvk),"
                 " null)"
                 for i in range(low, w)
             )
-    ex = (
-        sigs.select(
-            "doc_id",
-            "sh_lo",
-            "sh_hi",
-            F.explode(
-                F.expr(
-                    "filter(array(" + ",".join(structs) + "),"
-                    " x -> x is not null)"
-                )
-            ).alias("bk"),
-        )
-        .select("doc_id", "sh_lo", "sh_hi", "bk.band", "bk.bvk")
-    )
-
-    _EMPTY = {
-        "doc_a": pd.Series(dtype="int64"),
-        "doc_b": pd.Series(dtype="int64"),
-        "hamming": pd.Series(dtype="int64"),
-    }
+    ex = sigs.select(
+        "doc_id",
+        *parts,
+        *lanes,
+        F.explode(
+            F.expr("filter(array(" + ",".join(keys) + "), x -> x is not null)")
+        ).alias("bk"),
+    ).select("doc_id", *parts, *lanes, "bk.band", "bk.bvk")
     in_task_bits = low if r >= 1 else 0
 
     def _mih_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         bvk = pdf["bvk"].to_numpy()
         order = np.argsort(bvk, kind="stable")
         bvk = bvk[order]
-        vals = bvk >> 1
         ids = pdf["doc_id"].to_numpy()[order]
-        lo_v = pdf["sh_lo"].to_numpy()[order].astype(np.uint64)
-        hi_v = pdf["sh_hi"].to_numpy()[order].astype(np.uint64)
-        uvals, starts = np.unique(vals, return_index=True)
-        bounds = np.append(starts, len(vals))
+        sig = [pdf[c].to_numpy()[order].astype(np.uint64) for c in lanes]
+        uvals, starts = np.unique(bvk >> 1, return_index=True)
+        bounds = np.append(starts, len(bvk))
         # the packed key sorts exacts (kind bit 0) before variants of
         # the same bucket, so the exact segment is a prefix
         n_exact = np.searchsorted(bvk, uvals * 2 + 1, side="left") - starts
         idx = {int(v): i for i, v in enumerate(uvals)}
-        outs = [pd.DataFrame(_EMPTY)]
+        outs = [(np.empty(0, np.int64),) * 3]
 
-        def emit(ham, mask_m, ids_r, ids_c):
-            rr, cc = np.nonzero(mask_m)
-            if len(rr):
-                a = ids_r[rr]
-                bb = ids_c[cc]
+        def compare(r0: int, n_r: int, c0: int, c1: int, tri: bool):
+            # rows [r0, r0+n_r) × cols [c0, c1) in 4096-row chips so the
+            # XOR matrix stays bounded on a mass-duplicate bucket; ``tri``
+            # keeps the exact×exact upper triangle plus every variant col
+            cols = np.arange(c1 - c0)[None, :]
+            for q0 in range(0, n_r, 4096):
+                q1 = min(q0 + 4096, n_r)
+                rows = slice(r0 + q0, r0 + q1)
+                ham = _np_pop64(sig[0][rows, None] ^ sig[0][None, c0:c1])
+                for lane in sig[1:]:
+                    ham += _np_pop64(lane[rows, None] ^ lane[None, c0:c1])
+                ham = ham.astype(np.int64)
+                m = ham <= max_hamming
+                if tri:
+                    m &= (np.arange(q0, q1)[:, None] < cols) | (cols >= n_r)
+                rr, cc = np.nonzero(m)
+                a, bb = ids[r0 + q0 + rr], ids[c0 + cc]
                 outs.append(
-                    pd.DataFrame(
-                        {
-                            "doc_a": np.minimum(a, bb),
-                            "doc_b": np.maximum(a, bb),
-                            "hamming": ham[rr, cc],
-                        }
-                    )
+                    (np.minimum(a, bb), np.maximum(a, bb), ham[rr, cc])
                 )
 
         for i in range(len(uvals)):
@@ -1191,54 +1187,116 @@ def _simhash_mih_pairs(
                 continue
             # (1) bucket-local: exact×exact triangle + exact×variant
             if s1 - s0 >= 2:
-                cols = np.arange(s1 - s0)[None, :]
-                for c0 in range(0, n_e, 4096):
-                    c1 = min(c0 + 4096, n_e)
-                    ham = (
-                        _np_pop64(lo_v[s0 + c0 : s0 + c1, None] ^ lo_v[None, s0:s1])
-                        + _np_pop64(hi_v[s0 + c0 : s0 + c1, None] ^ hi_v[None, s0:s1])
-                    ).astype(np.int64)
-                    rows = np.arange(c0, c1)[:, None]
-                    m = (
-                        ((cols < n_e) & (rows < cols)) | (cols >= n_e)
-                    ) & (ham <= max_hamming)
-                    emit(ham, m, ids[s0 + c0 : s0 + c1], ids[s0:s1])
+                compare(s0, n_e, s0, s1, True)
             # (2) low-bit neighbor buckets, each unordered pair once
             v = int(uvals[i])
             for t in range(in_task_bits):
                 u = v ^ (1 << t)
-                if u < v:
-                    continue
-                j = idx.get(u)
-                if j is None:
-                    continue
-                t0 = bounds[j]
-                n_e2 = int(n_exact[j])
-                if n_e2 == 0:
-                    continue
-                for c0 in range(0, n_e, 4096):
-                    c1 = min(c0 + 4096, n_e)
-                    ham = (
-                        _np_pop64(
-                            lo_v[s0 + c0 : s0 + c1, None]
-                            ^ lo_v[None, t0 : t0 + n_e2]
-                        )
-                        + _np_pop64(
-                            hi_v[s0 + c0 : s0 + c1, None]
-                            ^ hi_v[None, t0 : t0 + n_e2]
-                        )
-                    ).astype(np.int64)
-                    m = ham <= max_hamming
-                    emit(ham, m, ids[s0 + c0 : s0 + c1], ids[t0 : t0 + n_e2])
-        return pd.concat(outs, ignore_index=True)
+                j = idx.get(u) if u > v else None
+                if j is not None and n_exact[j]:
+                    t0 = bounds[j]
+                    compare(s0, n_e, t0, t0 + int(n_exact[j]), False)
+        a, bb, h = (np.concatenate(x) for x in zip(*outs))
+        key = {p: pdf[p].iloc[0] for p in parts}
+        return pd.DataFrame({**key, "doc_a": a, "doc_b": bb, "hamming": h})
 
-    coarse = ex.withColumn(
-        "__sub", F.expr(f"shiftrightunsigned(bvk, {low + 1})")
+    schema = ", ".join(
+        [f"{p} {sigs.schema[p].dataType.simpleString()}" for p in parts]
+        + ["doc_a long", "doc_b long", "hamming long"]
     )
     return (
-        coarse.groupBy("band", "__sub")
-        .applyInPandas(_mih_kernel, "doc_a long, doc_b long, hamming long")
-        .groupBy("doc_a", "doc_b")
+        ex.withColumn("__sub", F.expr(f"shiftrightunsigned(bvk, {low + 1})"))
+        .groupBy(*parts, "band", "__sub")
+        .applyInPandas(_mih_kernel, schema)
+        .groupBy(*parts, "doc_a", "doc_b")
+        .agg(F.max("hamming").alias("hamming"))
+    )
+
+
+def _simhash_mih_pairs(
+    agg: DataFrame,
+    max_hamming: int,
+    n_docs: int | None = None,
+    max_compares: float | None = None,
+) -> DataFrame:
+    """Corpus-scale plan shape for ``simhash_near_dup_pairs``: the two
+    32-bit signature halves assembled from the SWAR frame, mined by
+    ``_mih_pairs`` at the widest single-flip geometry (``mih_bands``).
+
+    The repartition between signature assembly and key emit is a
+    deliberate exchange barrier: without it CollapseProject inlines the
+    full SWAR majority-vote expression into every variant-key
+    expression and Catalyst planning alone costs seconds
+    (data-size-independent; the same pathology as deriving band keys
+    from sh_lo/sh_hi in the banded plan).
+    """
+    sigs = agg.select(
+        "doc_id", _swar_half(0, "sh_lo"), _swar_half(32, "sh_hi")
+    ).repartition("doc_id")
+    return _mih_pairs(
+        sigs,
+        ["sh_lo", "sh_hi"],
+        32,
+        mih_bands(max_hamming),
+        max_hamming,
+        n_rows=n_docs,
+        max_compares=max_compares,
+    )
+
+
+def _band_rows(
+    src: DataFrame, cols: list[str | Column], band_vals: list[str]
+) -> DataFrame:
+    """``cols`` of ``src`` plus one row per band: (band, band_val), band k
+    taking the SQL expression ``band_vals[k]``."""
+    bands = F.expr(
+        "array("
+        + ",".join(
+            f"struct({k} AS band, ({v}) AS band_val)"
+            for k, v in enumerate(band_vals)
+        )
+        + ")"
+    )
+    ex = src.select(*cols, F.explode(bands).alias("bk"))
+    return ex.select(*ex.columns[:-1], "bk.band", "bk.band_val")
+
+
+def _banded_pairs(
+    ex: DataFrame,
+    lanes: list[str],
+    max_hamming: int,
+    parts: tuple[str, ...] = (),
+) -> DataFrame:
+    """Small-corpus pair arm shared by the three near-dup families:
+    exact-match pigeonhole bands (``ex`` from ``_band_rows``; h <
+    n_bands disjoint bands ⇒ some band IDENTICAL in every qualifying
+    pair), in-row a<b combos per (parts, band, band_val) bucket verified
+    by the popcount summed over ``lanes``. No Python stage: the
+    interpreted per-pair cost is occupancy²-bounded and small at the
+    sizes the callers' gates route here. Pairs colliding in several
+    bands dedup in the final groupBy (hamming is identical in every
+    collision)."""
+    grp = (
+        ex.groupBy(*parts, "band", "band_val")
+        .agg(
+            F.array_sort(F.collect_list(F.struct("doc_id", *lanes))).alias(
+                "ds"
+            )
+        )
+        .where(F.size("ds") >= 2)
+    )
+    ham = " + ".join(f"bit_count(x.{c} ^ y.{c})" for c in lanes)
+    combos = F.expr(
+        _pairs_sql(
+            "x.doc_id AS doc_a, y.doc_id AS doc_b, "
+            f"cast({ham} as bigint) AS hamming"
+        )
+    )
+    return (
+        grp.select(*parts, F.explode(combos).alias("p"))
+        .select(*parts, "p.doc_a", "p.doc_b", "p.hamming")
+        .where(F.col("hamming") <= max_hamming)
+        .groupBy(*parts, "doc_a", "doc_b")
         .agg(F.max("hamming").alias("hamming"))
     )
 
@@ -1310,21 +1368,11 @@ def simhash_near_dup_pairs(
     # pair stage it sizes — the resolve_planes convention).
     if max_hamming <= 7 and _estimated_bytes(df) >= SIMHASH_MIH_BYTES:
         return _simhash_mih_pairs(agg, max_hamming, n_docs=df.count())
-    bands = F.expr(
-        "array("
-        + ",".join(
-            f"struct({k} AS band, ({_swar_bits_sql(width * k, width)})"
-            " AS band_val)"
-            for k in range(n_bands)
-        )
-        + ")"
+    ex = _band_rows(
+        agg,
+        ["doc_id", _swar_half(0, "sh_lo"), _swar_half(32, "sh_hi")],
+        [_swar_bits_sql(width * k, width) for k in range(n_bands)],
     )
-    ex = agg.select(
-        "doc_id",
-        _swar_half(0, "sh_lo"),
-        _swar_half(32, "sh_hi"),
-        F.explode(bands).alias("bk"),
-    ).select("doc_id", "sh_lo", "sh_hi", "bk.band", "bk.band_val")
     # Size-gated pair stage (the ngram_jaccard two-plan-shapes precedent;
     # value-identical either way, asserted in tests):
     #
@@ -1347,45 +1395,13 @@ def simhash_near_dup_pairs(
     # no per-bucket round-trip). Same buckets, same pairs; only the
     # transport granularity changes. Size ``sub_groups`` so a task holds
     # ~500k rows (n_bands·sub_groups tasks must also cover the cluster).
+    if _estimated_bytes(df) < SIMHASH_KERNEL_BYTES:
+        return _banded_pairs(ex, ["sh_lo", "sh_hi"], max_hamming)
+
     import numpy as np
     import pandas as pd
 
-    if _estimated_bytes(df) < SIMHASH_KERNEL_BYTES:
-        grp = (
-            ex.groupBy("band", "band_val")
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct("doc_id", "sh_lo", "sh_hi"))
-                ).alias("ds")
-            )
-            .where(F.size("ds") >= 2)
-        )
-        combos = F.expr(
-            "flatten(transform(ds, (x, i) -> "
-            "transform(slice(ds, i + 2, size(ds)), y -> "
-            "struct(x.doc_id AS doc_a, y.doc_id AS doc_b, "
-            "cast(bit_count(x.sh_lo ^ y.sh_lo) + "
-            "bit_count(x.sh_hi ^ y.sh_hi) as bigint) AS hamming))))"
-        )
-        return (
-            grp.select(F.explode(combos).alias("p"))
-            .select("p.doc_a", "p.doc_b", "p.hamming")
-            .where(F.col("hamming") <= max_hamming)
-            .groupBy("doc_a", "doc_b")
-            .agg(F.max("hamming").alias("hamming"))
-        )
-
     sub_groups = 64
-
-    def _pop64(x):
-        m1 = np.uint64(0x5555555555555555)
-        m2 = np.uint64(0x3333333333333333)
-        m4 = np.uint64(0x0F0F0F0F0F0F0F0F)
-        h = np.uint64(0x0101010101010101)
-        x = x - ((x >> np.uint64(1)) & m1)
-        x = (x & m2) + ((x >> np.uint64(2)) & m2)
-        x = (x + (x >> np.uint64(4))) & m4
-        return (x * h) >> np.uint64(56)
 
     _EMPTY = {
         "doc_a": pd.Series(dtype="int64"),
@@ -1407,8 +1423,8 @@ def simhash_near_dup_pairs(
             for c0 in range(0, len(ids), 4096):
                 c1 = min(c0 + 4096, len(ids))
                 ham = (
-                    _pop64(lo[c0:c1, None] ^ lo[None, :])
-                    + _pop64(hi[c0:c1, None] ^ hi[None, :])
+                    _np_pop64(lo[c0:c1, None] ^ lo[None, :])
+                    + _np_pop64(hi[c0:c1, None] ^ hi[None, :])
                 ).astype(np.int64)
                 rows = np.arange(c0, c1)[:, None]
                 cols = np.arange(len(ids))[None, :]
@@ -1548,50 +1564,13 @@ def simhash128_near_dup_pairs(
         return _simhash128_mih_pairs(
             agg, max_hamming, n_docs=df.count(), max_compares=max_compares
         )
-    bands = F.expr(
-        "array("
-        + ",".join(
-            f"struct({k} AS band, ({_swar_bits_sql(16 * k, 16)})"
-            " AS band_val)"
-            for k in range(8)
-        )
-        + ")"
+    lanes = [f"sh_{i}" for i in range(4)]
+    ex = _band_rows(
+        agg,
+        ["doc_id", *(_swar_half(32 * i, c) for i, c in enumerate(lanes))],
+        [_swar_bits_sql(16 * k, 16) for k in range(8)],
     )
-    ex = agg.select(
-        "doc_id",
-        _swar_half(0, "sh_0"),
-        _swar_half(32, "sh_1"),
-        _swar_half(64, "sh_2"),
-        _swar_half(96, "sh_3"),
-        F.explode(bands).alias("bk"),
-    ).select(
-        "doc_id", "sh_0", "sh_1", "sh_2", "sh_3", "bk.band", "bk.band_val"
-    )
-    grp = (
-        ex.groupBy("band", "band_val")
-        .agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct("doc_id", "sh_0", "sh_1", "sh_2", "sh_3")
-                )
-            ).alias("ds")
-        )
-        .where(F.size("ds") >= 2)
-    )
-    ham = " + ".join(f"bit_count(x.sh_{i} ^ y.sh_{i})" for i in range(4))
-    combos = F.expr(
-        "flatten(transform(ds, (x, i) -> "
-        "transform(slice(ds, i + 2, size(ds)), y -> "
-        "struct(x.doc_id AS doc_a, y.doc_id AS doc_b, "
-        f"cast({ham} as bigint) AS hamming))))"
-    )
-    return (
-        grp.select(F.explode(combos).alias("p"))
-        .select("p.doc_a", "p.doc_b", "p.hamming")
-        .where(F.col("hamming") <= max_hamming)
-        .groupBy("doc_a", "doc_b")
-        .agg(F.max("hamming").alias("hamming"))
-    )
+    return _banded_pairs(ex, lanes, max_hamming)
 
 
 def _simhash128_mih_pairs(
@@ -1602,207 +1581,25 @@ def _simhash128_mih_pairs(
 ) -> DataFrame:
     """4×32-bit-band MIH pair stage for 128-bit signatures — the
     geometry whose band-collision term is 2^16× smaller than the
-    64-bit family's (the round-13 sixth-decade remedy). Mechanics are
-    the ``_simhash_mih_pairs`` transport ported to two popcount lanes:
-    band k IS the packed half sh_k, the set-bit rule emits one variant
-    orientation per SET top bit, tasks own contiguous 2^(32-s) bucket
-    slices, and verification is the full 128-bit popcount over the
-    four halves. Any s in [1, 31] is value-exact.
-
-    Concentration refusal (round 14, per driver advice): wide bands fix
-    the AVERAGE-occupancy term (Θ(n²/2^32) per band, sub-dominant to
-    ~4e10 docs), but a mass-duplicated signature value of c docs still
-    plans c²/2 within-bucket compares regardless of band width — the
-    exact pathology ``MIH_MAX_COMPARES`` refuses in the 16-bit twins.
-    A dense 2^32 histogram is unbuildable, so the probe aggregates the
-    EXACT within-bucket triangle term Σ_buckets c(c−1)/2 per band
-    server-side (groupBy (band, value) → per-band SUM; the collect is
-    ≤ b rows, never the value domain) and refuses above the budget.
-    This is a certified LOWER bound on planned compares — it omits the
-    distance-1 neighbor products, which need a paired mass value at
-    v^bit — so refusal fires only on plans that certainly exceed the
-    budget; the diffuse remainder is the sub-dominant average term."""
-    import numpy as np
-    import pandas as pd
-
-    b, w = 4, 32
-    r = max_hamming // b
-    s = min(4, w - 1)
-    if n_docs:
-        while s < min(w - 1, 16) and n_docs * (2 + s) * b > 1_000_000 * b * (
-            1 << s
-        ):
-            s += 1
-    low = w - s
+    64-bit family's (the round-13 sixth-decade remedy): the four packed
+    halves sh_0..sh_3, band k being half k, mined by ``_mih_pairs``
+    with full 128-bit popcount verification. Wide bands fix the
+    AVERAGE-occupancy term, not concentration, so the miner's 32-bit
+    probe (the within-bucket triangle lower bound) still refuses a
+    mass-duplicated signature above ``max_compares``."""
+    lanes = [f"sh_{i}" for i in range(4)]
     sigs = agg.select(
-        "doc_id",
-        _swar_half(0, "sh_0"),
-        _swar_half(32, "sh_1"),
-        _swar_half(64, "sh_2"),
-        _swar_half(96, "sh_3"),
+        "doc_id", *(_swar_half(32 * i, c) for i, c in enumerate(lanes))
     ).repartition("doc_id")
-    budget = MIH_MAX_COMPARES if max_compares is None else max_compares
-    if n_docs and n_docs >= MIH_PROBE_MIN_DOCS:
-        vals = F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(k).alias("band"), F.col(f"sh_{k}").alias("v")
-                    )
-                    for k in range(b)
-                ]
-            )
-        ).alias("bk")
-        tri = (
-            sigs.select(vals)
-            .select(F.col("bk.band").alias("band"), F.col("bk.v").alias("v"))
-            .groupBy("band", "v")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .where(F.col("c") >= 2)
-            .groupBy("band")
-            .agg(
-                F.sum(
-                    F.col("c").cast("double")
-                    * (F.col("c") - 1).cast("double")
-                    / 2.0
-                ).alias("tri")
-            )
-            .collect()
-        )
-        planned = sum(float(row["tri"] or 0.0) for row in tri)
-        if planned > budget:
-            raise ValueError(
-                f"simhash128 MIH planned within-bucket compare volume "
-                f"{planned:.2e} exceeds max_compares={budget:.0e} at the "
-                f"{b}×{w}-bit band geometry: the corpus concentrates "
-                f"mass-duplicated signature values (c docs in one bucket "
-                f"plan c²/2 compares at ANY band width). Exact-dedup "
-                f"identical fingerprints first (exact_dedup collapses "
-                f"them to one representative), shard the corpus, or "
-                f"raise max_compares after sizing the cluster."
-            )
-    structs = []
-    for k in range(b):
-        bv = f"sh_{k}"
-        structs.append(
-            f"struct({k} AS band, cast({bv} * 2 as bigint) AS bvk)"
-        )
-        if r >= 1:
-            structs.extend(
-                f"if((shiftrightunsigned({bv}, {i}) & 1) = 1,"
-                f" struct({k} AS band,"
-                f" cast(({bv} ^ {1 << i}) * 2 + 1 as bigint) AS bvk),"
-                " null)"
-                for i in range(low, w)
-            )
-    ex = sigs.select(
-        "doc_id",
-        "sh_0",
-        "sh_1",
-        "sh_2",
-        "sh_3",
-        F.explode(
-            F.expr(
-                "filter(array(" + ",".join(structs) + "),"
-                " x -> x is not null)"
-            )
-        ).alias("bk"),
-    ).select(
-        "doc_id", "sh_0", "sh_1", "sh_2", "sh_3", "bk.band", "bk.bvk"
-    )
-
-    _EMPTY = {
-        "doc_a": pd.Series(dtype="int64"),
-        "doc_b": pd.Series(dtype="int64"),
-        "hamming": pd.Series(dtype="int64"),
-    }
-    in_task_bits = low if r >= 1 else 0
-
-    def _mih_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        bvk = pdf["bvk"].to_numpy()
-        order = np.argsort(bvk, kind="stable")
-        bvk = bvk[order]
-        vals = bvk >> 1
-        ids = pdf["doc_id"].to_numpy()[order]
-        halves = [
-            pdf[f"sh_{i}"].to_numpy()[order].astype(np.uint64)
-            for i in range(4)
-        ]
-        uvals, starts = np.unique(vals, return_index=True)
-        bounds = np.append(starts, len(vals))
-        n_exact = np.searchsorted(bvk, uvals * 2 + 1, side="left") - starts
-        idx = {int(v): i for i, v in enumerate(uvals)}
-        outs = [pd.DataFrame(_EMPTY)]
-
-        def ham_block(r0, r1, c0, c1):
-            h = _np_pop64(halves[0][r0:r1, None] ^ halves[0][None, c0:c1])
-            for q in range(1, 4):
-                h = h + _np_pop64(
-                    halves[q][r0:r1, None] ^ halves[q][None, c0:c1]
-                )
-            return h.astype(np.int64)
-
-        def emit(ham, mask_m, ids_r, ids_c):
-            rr, cc = np.nonzero(mask_m)
-            if len(rr):
-                a = ids_r[rr]
-                bb = ids_c[cc]
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "doc_a": np.minimum(a, bb),
-                            "doc_b": np.maximum(a, bb),
-                            "hamming": ham[rr, cc],
-                        }
-                    )
-                )
-
-        for i in range(len(uvals)):
-            s0, s1 = bounds[i], bounds[i + 1]
-            n_e = int(n_exact[i])
-            if n_e == 0:
-                continue
-            if s1 - s0 >= 2:
-                cols = np.arange(s1 - s0)[None, :]
-                for c0 in range(0, n_e, 4096):
-                    c1 = min(c0 + 4096, n_e)
-                    ham = ham_block(s0 + c0, s0 + c1, s0, s1)
-                    rows = np.arange(c0, c1)[:, None]
-                    m = (
-                        ((cols < n_e) & (rows < cols)) | (cols >= n_e)
-                    ) & (ham <= max_hamming)
-                    emit(ham, m, ids[s0 + c0 : s0 + c1], ids[s0:s1])
-            v = int(uvals[i])
-            for t in range(in_task_bits):
-                u = v ^ (1 << t)
-                if u < v:
-                    continue
-                j = idx.get(u)
-                if j is None:
-                    continue
-                t0 = bounds[j]
-                n_e2 = int(n_exact[j])
-                if n_e2 == 0:
-                    continue
-                for c0 in range(0, n_e, 4096):
-                    c1 = min(c0 + 4096, n_e)
-                    ham = ham_block(s0 + c0, s0 + c1, t0, t0 + n_e2)
-                    m = ham <= max_hamming
-                    emit(
-                        ham, m, ids[s0 + c0 : s0 + c1], ids[t0 : t0 + n_e2]
-                    )
-        return pd.concat(outs, ignore_index=True)
-
-    coarse = ex.withColumn(
-        "__sub", F.expr(f"shiftrightunsigned(bvk, {low + 1})")
-    )
-    return (
-        coarse.groupBy("band", "__sub")
-        .applyInPandas(
-            _mih_kernel, "doc_a long, doc_b long, hamming long"
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.max("hamming").alias("hamming"))
+    return _mih_pairs(
+        sigs,
+        lanes,
+        32,
+        4,
+        max_hamming,
+        n_rows=n_docs,
+        max_compares=max_compares,
+        family="simhash128",
     )
 
 
@@ -2293,6 +2090,9 @@ def incremental_line_dedup(
         .groupBy("__hl1", "__hl2")
         .agg(F.min("__k").alias("__mk"))
     )
+    kept = ~F.col("__elig") | (
+        (F.col("__k") == F.col("__mk")) & F.col("__dup").isNull()
+    )
     flagged = (
         lines.select(
             "doc_id",
@@ -2314,21 +2114,8 @@ def incremental_line_dedup(
             "pos",
             # removed lines ship no text into the rebuild exchange —
             # see line_dedup (round 15, guide §2.3)
-            F.when(
-                ~F.col("__elig")
-                | (
-                    (F.col("__k") == F.col("__mk"))
-                    & F.col("__dup").isNull()
-                ),
-                F.col("line"),
-            ).alias("line"),
-            (
-                ~F.col("__elig")
-                | (
-                    (F.col("__k") == F.col("__mk"))
-                    & F.col("__dup").isNull()
-                )
-            ).alias("__kept"),
+            F.when(kept, F.col("line")).alias("line"),
+            kept.alias("__kept"),
         )
     )
     agg = flagged.groupBy("doc_id").agg(

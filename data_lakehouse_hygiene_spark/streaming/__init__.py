@@ -87,7 +87,14 @@ def run_to_memory(
     million-row passthrough rows (streaming_enrich/debounce at sf1) that
     driver round trip dominated the whole stream's wall. The checkpoint
     materializes the same rows once in executor storage; the returned
-    DataFrame is independent of the dropped view."""
+    DataFrame is independent of the dropped view.
+
+    The ``localCheckpoint`` copy lives in executor block storage with no
+    lineage back to the sink, so it assumes a single node or static
+    executor allocation: an executor lost to dynamic allocation takes its
+    blocks with it and the result can no longer be recomputed. Callers
+    should let the returned DataFrame go out of scope once consumed so
+    its cached blocks are released."""
     spark = stream_df.sparkSession
     sink = f"stream_sink_{uuid.uuid4().hex[:12]}"
     q = (

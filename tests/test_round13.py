@@ -462,7 +462,7 @@ def test_media_mih_gate_refuses_mass_dup_histogram(spark, monkeypatch):
             fp, max_hamming=7, n_assets=25_000, max_compares=10_000
         )
     msg = str(exc.value)
-    assert "planned MIH compare volume" in msg
+    assert "media_near_dup MIH planned compare volume" in msg
     assert "Exact-dedup identical phash" in msg
     # exact term: 4 bands x C(200,2) single-bucket triangles
     assert "7.96e+04" in msg

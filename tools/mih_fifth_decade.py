@@ -1,15 +1,17 @@
 """Fifth-decade MIH pair-stage measurement (SCALING.md geometry
-contract): run both MIH pair miners SOLO over the 10M-fingerprint
-corpus from ``tools/gen_fingerprints.py`` and record wall time plus the
-sub-bit geometry each one selects (the claim under test: past ~10M
-assets the s-growth loop leaves the s = 4 floor).
+contract): run the MIH pair miner SOLO through its media and text entry
+points over the 10M-fingerprint corpus from ``tools/gen_fingerprints.py``
+and record wall time plus the sub-bit geometry each selects (the claim
+under test: past ~10M assets the s-growth loop leaves the s = 4 floor).
 
 Modes:
-  python tools/mih_fifth_decade.py check [n]   cross-twin equality at n
-      rows (default 50k): media_near_dup and _simhash_mih_pairs consume
-      the SAME planted signatures, so their pair sets must be identical
-      — a full end-to-end equivalence of the two independently-coded
-      miners, plus brute-force NumPy verification of the pair set.
+  python tools/mih_fifth_decade.py check [n]   correctness at n rows
+      (default 50k): the pair set must equal a brute-force NumPy
+      all-pairs scan of the planted signatures — that comparison is the
+      real check. media_near_dup and _simhash_mih_pairs both run the one
+      ``dedup._mih_pairs`` miner, so their agreement ("twins_equal")
+      only confirms that the phash frame and the sh_lo/sh_hi frame carry
+      the same signatures.
   python tools/mih_fifth_decade.py media|text [rows]   timed solo run
       (default: all 10M rows), one warm pass measured after a session
       warmup no-op; prints one JSON line.
@@ -45,9 +47,8 @@ def main() -> None:
     from data_lakehouse_hygiene_spark.session import get_spark
     from data_lakehouse_hygiene_spark.operators import dedup, multimodal
 
-    spark = get_spark(
-        app_name=f"mih5-{mode}", master="local[32]", shuffle_partitions=32
-    )
+    # session sized by SPARK_GRAFT_CPUS (get_spark's default)
+    spark = get_spark(app_name=f"mih5-{mode}")
     fp = spark.read.parquet(f"{SRC}/media_fp.parquet")
     agg = spark.read.parquet(f"{SRC}/simhash_agg.parquet")
     if n_rows:
