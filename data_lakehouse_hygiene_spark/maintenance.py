@@ -85,14 +85,17 @@ def compact_small_files(
     compaction). Returns the data-file count actually written (verified by
     listing, not assumed). The final overwrite is Spark's per-directory
     commit protocol — same single-writer crash window as
-    ``sinks.merge_upsert``'s Parquet fallback, and same temp-dir cleanup."""
+    ``sinks.merge_upsert``'s Parquet fallback, and same temp-dir cleanup.
+    The staged copy is read back with the schema just written, which
+    skips a second footer-inference job."""
     from .sinks import _delete_dir
+    from .sources import _reader
 
     tmp = path + "__compact"
     try:
         df = spark.read.format(fmt).load(path)
         df.repartition(target_files).write.format(fmt).mode("overwrite").save(tmp)
-        out = spark.read.format(fmt).load(tmp)
+        out = _reader(spark, fmt, df.schema).load(tmp)
         out.write.format(fmt).mode("overwrite").save(path)
     finally:
         _delete_dir(spark, tmp)
@@ -178,38 +181,72 @@ def schema_drift(expected: DataFrame, actual: DataFrame) -> list[dict[str, str]]
     return drift
 
 
+def dq_report(
+    df: DataFrame,
+    rules: list[tuple[str, "F.Column"]],
+    unique_key: list[str] | None = None,
+) -> DataFrame:
+    """One-row data-quality report computed by ONE query: ``n_rows``, the
+    violation count of each (name, violation_predicate) rule as
+    ``v0``, ``v1``, … in rule order, and — with ``unique_key`` —
+    ``n_duplicate_keys``, the number of key values held by more than one
+    row. ``dq_check`` renders it in long form; ``pipeline.enforce_zone``
+    reads it directly, so a zone gate is one driver round-trip.
+
+    Semantics: a rule whose predicate is NULL is not a violation (the
+    ``when`` falls through to 0); NULL keys form one group, as
+    ``groupBy`` treats them; every count is coalesced to 0, so an EMPTY
+    input reports ``n_rows = 0`` and no violation (round-13 ADVICE: a
+    NULL SUM would otherwise read as every rule violated).
+
+    Scale: without a key, one conditional-SUM aggregate — adding rules
+    adds columns, not passes. With a key, one groupBy carrying the
+    per-key row count and per-key rule sums, then a global aggregate
+    of that key-grained table: the rules ride the uniqueness shuffle
+    instead of paying a second scan."""
+    viol = [F.when(pred, 1).otherwise(0) for _, pred in rules]
+
+    def total(c: "F.Column") -> "F.Column":
+        return F.coalesce(F.sum(c), F.lit(0)).cast("bigint")
+
+    if not unique_key:
+        return df.agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            *[total(v).alias(f"v{i}") for i, v in enumerate(viol)],
+        )
+    per_key = df.groupBy(*unique_key).agg(
+        F.count(F.lit(1)).alias("__c"),
+        *[F.sum(v).alias(f"__v{i}") for i, v in enumerate(viol)],
+    )
+    return per_key.agg(
+        total(F.col("__c")).alias("n_rows"),
+        *[total(F.col(f"__v{i}")).alias(f"v{i}") for i in range(len(viol))],
+        F.count(F.when(F.col("__c") > 1, 1)).alias("n_duplicate_keys"),
+    )
+
+
 def dq_check(df: DataFrame, rules: list[tuple[str, "F.Column"]]) -> DataFrame:
     """Declarative data-quality expectations, evaluated in ONE aggregate
     pass: each rule is (name, violation_predicate); output is long-form
     (rule, n_rows, n_violations, pass) — the engine-level version of the
     reference's ad-hoc guards (empty-input checks, value clamps,
-    SURVEY.md §5.1).
+    SURVEY.md §5.1). The counts are ``dq_report``'s one row, unpivoted.
 
     Scale: every rule is a conditional SUM in the same hash aggregate —
     adding rules adds columns, not passes. Uniqueness/referential rules
     need their own grouped/join form (see ``dq_unique``)."""
-    n = F.count(F.lit(1))
-    # Coalesce to 0: SUM over zero rows is NULL, which would make
-    # `pass` NULL (falsy) and report every rule violated on an EMPTY
-    # input — empty inputs must fail only non_empty (round-13 ADVICE).
-    aggs = [n.alias("__n")] + [
-        F.coalesce(F.sum(F.when(pred, 1).otherwise(0)), F.lit(0)).alias(
-            f"__v_{i}"
-        )
-        for i, (_, pred) in enumerate(rules)
-    ]
-    one = df.agg(*aggs)
     rows = F.array(
         *[
             F.struct(
                 F.lit(name).alias("rule"),
-                F.col("__n").alias("n_rows"),
-                F.col(f"__v_{i}").cast("bigint").alias("n_violations"),
-                (F.col(f"__v_{i}") == 0).alias("pass"),
+                F.col("n_rows"),
+                F.col(f"v{i}").alias("n_violations"),
+                (F.col(f"v{i}") == 0).alias("pass"),
             )
             for i, (name, _) in enumerate(rules)
         ]
     )
+    one = dq_report(df, rules)
     return one.select(F.explode(rows).alias("r")).select("r.*")
 
 

@@ -19,10 +19,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from . import sinks
 from .operators import cleaning, scoring
-from .schemas import load_table
+from .schemas import TABLES, load_table
 from .sources import latest_partition_scan
 
 
@@ -49,40 +50,55 @@ def enforce_zone(
     require_rows: bool = True,
 ) -> DataFrame:
     """Declarative data-quality gate between medallion zones: evaluate
-    every (name, violation_predicate) rule in ``maintenance.dq_check``'s
-    SINGLE aggregate pass (plus one grouped pass for ``unique_key``) and
-    raise :class:`DataQualityError` naming each violated expectation —
-    BEFORE the zone write runs, so a violating batch never lands
-    half-written state downstream.
+    every (name, violation_predicate) rule, the ``unique_key`` check and
+    the row count in ONE query (``maintenance.dq_report``) and raise
+    :class:`DataQualityError` naming each violated expectation — BEFORE
+    the zone write runs, so a violating batch never lands half-written
+    state downstream.
 
     This formalizes the reference's ad-hoc runtime checking (empty-input
     guards ``sql_to_raw.py:39-41``, value clamps
     ``prescriptive_logic.py:84-85,117``, column prints — SURVEY §5.1) as
-    enforced expectations. Cost model: one conditional-SUM aggregate for
-    all rules together (adding rules adds columns, not passes), one
-    groupBy for uniqueness; every collect here is bounded by the rule
-    count (len(rules) rows / 1 row), never the data."""
+    enforced expectations. Cost model: one driver round-trip per gate —
+    a conditional-SUM aggregate for all rules together (adding rules
+    adds columns, not passes), grouped by ``unique_key`` when one is
+    given so the uniqueness count rides the same shuffle; ``non_empty``
+    reads that query's ``n_rows``. Only a gate with neither rules nor a
+    key probes with ``limit(1).count()``. The collect is one row, never
+    the data.
+
+    Failures are reported as the rules in declared order, then
+    ``unique(<key>)``, then ``non_empty``."""
     from . import maintenance
 
+    rules = list(rules or [])
     failures: list[str] = []
-    rows_seen: int | None = None
-    if rules:
-        report = maintenance.dq_check(df, list(rules)).collect()
-        rows_seen = report[0]["n_rows"] if report else 0
-        failures += [r["rule"] for r in report if not r["pass"]]
-    if unique_key:
-        dup = maintenance.dq_unique(df, list(unique_key)).collect()[0]
-        if dup["n_duplicate_keys"] > 0:
+    if rules or unique_key:
+        report = maintenance.dq_report(df, rules, unique_key).collect()[0]
+        failures += [
+            name for i, (name, _) in enumerate(rules) if report[f"v{i}"]
+        ]
+        if unique_key and report["n_duplicate_keys"]:
             failures.append(f"unique({','.join(unique_key)})")
-    if require_rows:
-        if rows_seen is None:
-            # bounded probe: LIMIT 1, no full count
-            rows_seen = df.limit(1).count()
-        if rows_seen == 0:
-            failures.append("non_empty")
+        rows_seen = report["n_rows"]
+    elif require_rows:
+        # bounded probe: LIMIT 1, no full count
+        rows_seen = df.limit(1).count()
+    if require_rows and rows_seen == 0:
+        failures.append("non_empty")
     if failures:
         raise DataQualityError(zone, failures)
     return df
+
+
+def raw_schema(name: str) -> StructType:
+    """The declared schema of a raw-zone table: the input table's columns
+    plus the ``ingest_ts`` STRING partition column ``append_snapshot``
+    adds. A new ``StructType`` — ``StructType.add`` would mutate the
+    shared declaration in ``TABLES``."""
+    return StructType(
+        TABLES[name].fields + [StructField("ingest_ts", StringType())]
+    )
 
 
 def clean_events_expectations() -> list[tuple[str, "F.Column"]]:
@@ -119,9 +135,11 @@ def clean(spark: SparkSession, lake: str) -> None:
     # partition predicate — the planned scan touches only the newest
     # partition's files (SURVEY §4.2 item 4, the "inject ingest_ts=max"
     # stretch). latest_ingest's runtime-max form remains for inputs that
-    # arrive as DataFrames without a path.
+    # arrive as DataFrames without a path. The declared raw schema skips
+    # the footer-inference job an undeclared read would start.
     ev = latest_partition_scan(
-        spark, f"{lake}/raw/events", fmt=sinks._FORMAT
+        spark, f"{lake}/raw/events", fmt=sinks._FORMAT,
+        schema=raw_schema("events"),
     ).drop("ingest_ts")
     ev = cleaning.normalize_columns(cleaning.drop_null_rows(ev, ["ts"]))
     enforce_zone(
@@ -134,7 +152,8 @@ def clean(spark: SparkSession, lake: str) -> None:
 
     cust = cleaning.normalize_columns(
         latest_partition_scan(
-            spark, f"{lake}/raw/customer", fmt=sinks._FORMAT
+            spark, f"{lake}/raw/customer", fmt=sinks._FORMAT,
+            schema=raw_schema("customer"),
         ).drop("ingest_ts")
     )
     enforce_zone(cust, f"{lake}/clean/customer", unique_key=["c_custkey"])
@@ -150,8 +169,10 @@ def curate(spark: SparkSession, lake: str, as_of: str | None = None) -> DataFram
     1: everything time-dependent takes ``as_of``) — reruns with the same
     inputs and stamp are bit-identical. ``None`` falls back to wall-clock
     for interactive use."""
-    ev = sinks.read_table(spark, f"{lake}/clean/events")
-    cust = sinks.read_table(spark, f"{lake}/clean/customer")
+    ev = sinks.read_table(spark, f"{lake}/clean/events", TABLES["events"])
+    cust = sinks.read_table(
+        spark, f"{lake}/clean/customer", TABLES["customer"]
+    )
     stamp = (
         F.lit(as_of).cast("timestamp")
         if as_of is not None
@@ -175,8 +196,10 @@ def curate(spark: SparkSession, lake: str, as_of: str | None = None) -> DataFram
 def serve(spark: SparkSession, lake: str) -> None:
     """Serving zone: projected dashboard tables, full refresh (the
     reference's Postgres ``if_exists='replace'`` loads)."""
-    ev = sinks.read_table(spark, f"{lake}/clean/events")
-    cust = sinks.read_table(spark, f"{lake}/clean/customer")
+    ev = sinks.read_table(spark, f"{lake}/clean/events", TABLES["events"])
+    cust = sinks.read_table(
+        spark, f"{lake}/clean/customer", TABLES["customer"]
+    )
     dashboard = cleaning.project(
         ev.join(
             F.broadcast(cust),

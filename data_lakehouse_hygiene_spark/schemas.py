@@ -7,6 +7,12 @@ At 100 TB schema inference is an anti-pattern — it triggers an extra full or
 sampled scan and can silently flip types between runs — so the engine
 declares every table schema up front and applies it at read time, which also
 lets Parquet readers prune columns and push filters against a stable schema.
+
+The medallion pipeline reads its own lake zones the same way: the raw zone
+with ``TABLES[name]`` plus the ``ingest_ts`` partition column
+(``pipeline.raw_schema``), the clean zone with ``TABLES[name]``. Each
+declared read skips the footer-inference job an undeclared Parquet read
+starts.
 """
 
 from __future__ import annotations

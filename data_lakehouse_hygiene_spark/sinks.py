@@ -21,6 +21,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from .sources import _reader
 
 try:  # Delta is optional in this environment
     from delta import DeltaTable  # type: ignore  # noqa: F401
@@ -74,8 +77,12 @@ def append_snapshot(df: DataFrame, path: str, ingest_ts: str) -> None:
     )
 
 
-def read_table(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.format(_FORMAT).load(path)
+def read_table(
+    spark: SparkSession, path: str, schema: StructType | None = None
+) -> DataFrame:
+    """Read a zone table. A declared ``schema`` skips the Parquet
+    footer-inference job an undeclared read starts (``sources._reader``)."""
+    return _reader(spark, _FORMAT, schema).load(path)
 
 
 def jdbc_write(df: DataFrame, url: str, table: str, mode: str = "append", **options: str) -> None:
@@ -138,7 +145,7 @@ def merge_upsert(
     tmp = path + "__merge_tmp"
     try:
         merged.write.format(_FORMAT).mode("overwrite").save(tmp)
-        spark.read.format(_FORMAT).load(tmp).write.format(_FORMAT).mode(
+        read_table(spark, tmp, merged.schema).write.format(_FORMAT).mode(
             "overwrite"
         ).save(path)
     finally:
@@ -191,7 +198,7 @@ def apply_cdc(
     tmp = path + "__merge_tmp"
     try:
         merged.write.format(_FORMAT).mode("overwrite").save(tmp)
-        spark.read.format(_FORMAT).load(tmp).write.format(_FORMAT).mode(
+        read_table(spark, tmp, merged.schema).write.format(_FORMAT).mode(
             "overwrite"
         ).save(path)
     finally:

@@ -18,16 +18,26 @@ from __future__ import annotations
 import json
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 
+def _reader(
+    spark: SparkSession, fmt: str, schema: StructType | None = None
+) -> DataFrameReader:
+    """A ``fmt`` reader. A declared ``schema`` skips schema inference, for
+    Parquet a one-task Spark job that reads file footers. Delta keeps its
+    schema in the transaction log (no inference job) and refuses a
+    read-time schema, so it ignores ``schema``."""
+    r = spark.read.format(fmt)
+    if schema is not None and fmt != "delta":
+        r = r.schema(schema)
+    return r
+
+
 def read_parquet(spark: SparkSession, path: str, schema: StructType | None = None) -> DataFrame:
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.parquet(path)
+    return _reader(spark, "parquet", schema).load(path)
 
 
 def read_csv(
@@ -198,6 +208,7 @@ def latest_partition_scan(
     path: str,
     ingest_col: str = "ingest_ts",
     fmt: str = "parquet",
+    schema: StructType | None = None,
 ) -> DataFrame:
     """S5 at 100 TB: the SURVEY §4.2-item-4 stretch — "inject
     ``ingest_ts = max`` predicates" — done the Spark-first way.
@@ -214,6 +225,10 @@ def latest_partition_scan(
     Partition values are URL-decoded before comparison (Hive encodes ':'
     as ``%3A``); ``append_snapshot``'s fixed-width ISO-8601 contract makes
     the lexicographic max chronological.
+
+    ``schema`` — the table's declared columns plus ``ingest_col`` — skips
+    the footer-inference job an undeclared Parquet read starts (see
+    ``_reader``); the file listing above is the only other driver work.
     """
     from urllib.parse import unquote
 
@@ -228,7 +243,7 @@ def latest_partition_scan(
     ]
     if not vals:
         raise FileNotFoundError(f"no {prefix}* partitions under {path}")
-    df = spark.read.format(fmt).load(path)
+    df = _reader(spark, fmt, schema).load(path)
     return df.where(F.col(ingest_col) == F.lit(max(vals)))
 
 

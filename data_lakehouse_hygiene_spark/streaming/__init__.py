@@ -272,9 +272,9 @@ def gated_zone_stream(
     ``spark.read.parquet(path)`` reads the whole zone.
 
     Scale: the gate cost per micro-batch is ``enforce_zone``'s one
-    conditional-SUM aggregate over the BATCH (plus one groupBy for
-    ``unique_key``), not the table — per-trigger work stays
-    proportional to new data, the file-source contract."""
+    query over the BATCH — a conditional-SUM aggregate, grouped by
+    ``unique_key`` when one is given — not the table: per-trigger work
+    stays proportional to new data, the file-source contract."""
     from .. import pipeline as _pipeline
 
     def _land(batch_df: DataFrame, batch_id: int) -> None:
