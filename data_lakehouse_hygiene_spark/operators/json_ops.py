@@ -23,13 +23,6 @@ def parse_json_col(df: DataFrame, col: str, schema: StructType | str, out: str) 
     return df.withColumn(out, F.from_json(F.col(col), schema))
 
 
-def json_get(col: str, path: str) -> Column:
-    """AQICN-style dotted-path projection (``data.iaqi.pm25.v``) without a
-    declared schema: ``get_json_object`` returns string → try_cast at the
-    call site."""
-    return F.get_json_object(F.col(col), f"$.{path}")
-
-
 def explode_levels(df: DataFrame, *levels: str) -> DataFrame:
     """BMKG-style N-level array flattening: one ``explode`` per level.
 

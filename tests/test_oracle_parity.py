@@ -45,6 +45,22 @@ def test_entry_smoke(spark):
     ]
 
 
+def test_every_query_function_registered_once():
+    # A repeated key in the hand-written registry literal silently drops an
+    # entry, so pin the registry against the module's q_* functions.
+    defined = {
+        fn
+        for name, fn in vars(entrymod).items()
+        if name.startswith("q_")
+        and callable(fn)
+        and fn.__module__ == entrymod.__name__
+    }
+    registered = list(entrymod.queries().values())
+    assert len(registered) == len(set(registered))
+    assert set(registered) == defined
+    assert len(entrymod.queries()) == len(entrymod.oracle_sql()) == 162
+
+
 def test_queries_have_oracles():
     q = entrymod.queries()
     o = entrymod.oracle_sql()

@@ -1,8 +1,9 @@
 """Dump `.explain("formatted")` for the named declared queries to
-plans/r15/<query>_<suffix>.txt — the judge-checkable evidence for every
-round-15 plan claim.
+<out_dir>/<query>_<suffix>.txt — the plan evidence behind a plan claim,
+captured as a before/after pair around a change (see plans/r14, plans/r15).
 
-Usage: python tools/gen_r15_plans.py <before|after> q1 q2 ...
+Usage: python tools/dump_plans.py <out_dir> <suffix> q1 q2 ...
+The queries read the tables under SPARK_GRAFT_SF_DIR (default: the sf0.1 set).
 """
 
 from __future__ import annotations
@@ -19,24 +20,19 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def main() -> None:
-    suffix = sys.argv[1]
-    assert suffix in ("before", "after"), "first arg must be before|after"
-    names = sys.argv[2:]
-    spark = get_spark(app_name="gen_r15_plans")
+    if len(sys.argv) < 4:
+        sys.exit(__doc__)
+    out_dir, suffix, names = sys.argv[1], sys.argv[2], sys.argv[3:]
+    spark = get_spark(app_name="dump_plans")
     spark.sparkContext.setLogLevel("ERROR")
     qs = entrymod.queries()
-    here = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans",
-        "r15",
-    )
-    os.makedirs(here, exist_ok=True)
+    os.makedirs(out_dir, exist_ok=True)
     for name in names:
         df = qs[name](spark, SF_DIR)
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
-        with open(os.path.join(here, f"{name}_{suffix}.txt"), "w") as fh:
+        with open(os.path.join(out_dir, f"{name}_{suffix}.txt"), "w") as fh:
             fh.write(plan)
         print("wrote", name, suffix)
 

@@ -1,7 +1,8 @@
-"""Measure the streaming family (round-15 / round-14 verdict item 6):
-per declared streaming row, availableNow end-to-end wall (median of
-reps) plus state-store totals (rows, memory) from the final
-StreamingQueryProgress of every query the row starts.
+"""Measure the streaming family: per declared streaming row,
+availableNow end-to-end wall (median of reps) plus state-store totals
+(rows, memory) from the final StreamingQueryProgress of every query the
+row starts. The progress comes from a ``StreamingQueryListener``, so the
+rows run the engine's own ``streaming.run_to_memory``.
 
 Usage: python tools/measure_streaming.py [sf_dir] [reps]
 Writes one line per row; paste into SCALING.md's STREAMING section.
@@ -18,8 +19,8 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
-from data_lakehouse_hygiene_spark import streaming  # noqa: E402
 from data_lakehouse_hygiene_spark.session import get_spark  # noqa: E402
+from perfbench.layers import ProgressListener  # noqa: E402
 
 ROWS = [
     "streaming_time_bucket",
@@ -34,54 +35,29 @@ ROWS = [
     "streaming_heavy_hitters",
 ]
 
-_PROGRESS: list[dict] = []
-_orig_run = streaming.run_to_memory
-
-
-def _instrumented(stream_df, output_mode="complete"):
-    """run_to_memory twin that records the final progress of the query."""
-    import uuid
-
-    spark = stream_df.sparkSession
-    sink = f"stream_sink_{uuid.uuid4().hex[:12]}"
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    if q.lastProgress:
-        _PROGRESS.append(q.lastProgress)
-    out = spark.table(sink).localCheckpoint(eager=True)
-    spark.catalog.dropTempView(sink)
-    return out
-
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     reps = int(sys.argv[2]) if len(sys.argv) > 2 else 5
     spark = get_spark(app_name="measure_streaming")
     spark.sparkContext.setLogLevel("ERROR")
-    streaming.run_to_memory = _instrumented
+    listener = ProgressListener()
+    spark.streams.addListener(listener)
     qs = entrymod.queries()
     results = {}
     for name in ROWS:
         if name not in qs:
             continue
+        listener.drain()  # forget the previous row's timed runs
         # warmup (also captures state metrics)
-        _PROGRESS.clear()
         df = qs[name](spark, sf_dir)
         n_out = df.count()
-        state_rows = 0
-        state_mem = 0
-        batches = 0
-        for p in _PROGRESS:
-            batches += 1
-            for so in p.get("stateOperators", []):
-                state_rows += so.get("numRowsTotal", 0)
-                state_mem += so.get("memoryUsedBytes", 0)
+        # drain() waits for every started query to terminate: the listener
+        # bus is asynchronous. Keep each query's final progress.
+        last = {str(p.runId): p for p in listener.drain()}
+        ops = [so for p in last.values() for so in p.stateOperators or []]
+        state_rows = sum(so.numRowsTotal for so in ops)
+        state_mem = sum(so.memoryUsedBytes for so in ops)
         ts = []
         for _ in range(reps):
             t0 = time.perf_counter()
@@ -95,9 +71,10 @@ def main() -> None:
             "out_rows": n_out,
             "state_rows_total": state_rows,
             "state_memory_bytes": state_mem,
-            "queries_started": batches,
+            "queries_started": len(last),
         }
         print(name, json.dumps(results[name]))
+    spark.streams.removeListener(listener)
     print(json.dumps({"sf_dir": sf_dir, "results": results}))
 
 
